@@ -17,6 +17,16 @@ Two maintenance passes:
    separately asserts stored == current, so a round that edits a
    query and skips this script fails its own suite.
 
+``N`` is the round in which the definition was edited, not the round
+that happens to run the script: a later run that only catches up the
+hashes still passes the editing round. Re-run the script after a
+round's LAST query or oracle edit. An edit made after the script has
+run leaves a stale ``def_hash`` behind.
+
+Usage::
+
+    python scripts/update_gate_history.py --round N
+
 Queries new to the registry are added automatically with
 ``last_driver_round: null`` and ``changed_round: <--round>``.
 """
@@ -45,7 +55,11 @@ def main() -> None:
         "--round",
         type=int,
         default=None,
-        help="current round number; required when any definition hash moved",
+        help=(
+            "round in which the moved definitions were edited (not the "
+            "round that runs the script); required when any definition "
+            "hash moved. Re-run after the round's last query or oracle edit"
+        ),
     )
     args = ap.parse_args()
 

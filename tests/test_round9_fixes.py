@@ -342,7 +342,9 @@ def test_gate_history_definition_hashes_are_current():
     }
     assert not drift, (
         "query definitions changed without a recorded changed_round — run "
-        f"scripts/update_gate_history.py --round <N>: {sorted(drift)}"
+        "scripts/update_gate_history.py --round <N>, with N the round that "
+        "edited them, after that round's last query or oracle edit: "
+        f"{sorted(drift)}"
     )
 
 
