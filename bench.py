@@ -52,6 +52,12 @@ one extra convergence attempt per query (max 5) and both the summary
 and BENCH_DETAIL carry ``quiet_start``/``quiet_start_bound`` so every
 artifact self-reports whether its floor came from a quiet host.
 
+Codegen counter: each attempt's Janino compile count (the change of
+Spark's ``CodegenMetrics`` compilation histogram across the attempt)
+is recorded per entry under ``codegen_compiles`` in BENCH_DETAIL.json,
+so the generated-class cache's effect reads as a counter, not only as
+wall clock.
+
 Cold artifact-build block (round-9 addition): the corpus-versioned
 artifacts (minhash/simhash signatures, postings, IVF/PQ quantizers,
 ANN ground truth) make the corpus loop warm, so their one-time build
@@ -180,6 +186,9 @@ def main() -> None:
         sys.stdout.flush()
     load1: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
+    codegen_compiles: dict[str, list[int]] = {}
+    compile_hist = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiled_before = compile_hist.getCount()
     t_all = time.perf_counter()
     for name, fn in sorted(reg.items()):
         # Converged best-of-N per query (round-14 policy, applied
@@ -196,6 +205,7 @@ def main() -> None:
         # rounds. All raw readings stay in BENCH_DETAIL ("runs") so the
         # spread itself documents the host regime per query.
         attempts: list[float] = []
+        compiles: list[int] = []
         for _ in range(max_attempts):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -203,6 +213,9 @@ def main() -> None:
             # no Python per-row hop); the noop sink runs the full plan.
             df.write.format("noop").mode("overwrite").save()
             attempts.append(round(time.perf_counter() - t0, 3))
+            compiled = compile_hist.getCount()
+            compiles.append(compiled - compiled_before)
+            compiled_before = compiled
             # Result fully materialized: drop this query's tracked
             # persists so cache pressure never builds across the corpus
             # run and every reading rebuilds the same state.
@@ -212,6 +225,7 @@ def main() -> None:
                 break
         times[name] = min(attempts)
         runs[name] = attempts
+        codegen_compiles[name] = compiles
         # Per-query 1-min load: lets a reader attribute any outlier to
         # the exact window where external load hit (BENCH_r06 lesson).
         load1[name] = round(os.getloadavg()[0], 2)
@@ -375,6 +389,7 @@ def main() -> None:
         json.dump(
             {"detail": "per_query_wall", "unit": "sec", "total": total,
              "policy": f"converged_best_of_n_max{max_attempts}", "runs": runs,
+             "codegen_compiles": codegen_compiles,
              "quiet_start": quiet_start, "quiet_start_bound": quiet_bound,
              "warm_fold": warm_fold,
              "committed_from_fold": committed_from_fold,

@@ -23,7 +23,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.scalar import sql_round_half_up
-from ..sources.catalog import register_views
+from ..sources.catalog import _pin_session_semantics, register_views
 from .etl import (
     build_agg_mensuel_categorie,
     build_agg_mensuel_magasin,
@@ -392,27 +392,41 @@ _SOURCE_ONLY_VIEWS = (
 
 def register_source_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register the source tables plus the view definitions that don't
-    reference the star — the cheap subset of :func:`register_all_views`."""
-    # Re-pointing the shared source temp tables at a different sf_dir
-    # invalidates any earlier full registration on this session.
-    if _REGISTERED.get(spark) not in (None, sf_dir):
-        _REGISTERED.pop(spark, None)
+    reference the star — the cheap subset of :func:`register_all_views`.
+    Idempotent per (session, sf_dir), and a hit after a full
+    registration of the same sf_dir."""
+    if sf_dir in (_SOURCES_REGISTERED.get(spark), _REGISTERED.get(spark)):
+        # A miss asserts the timezone pin in every read_table; a hit
+        # reads nothing, so it asserts the pin here.
+        _pin_session_semantics(spark)
+        return list(_SOURCE_ONLY_VIEWS)
+    _forget_registration(spark)
     register_views(spark, sf_dir)
     for name in _SOURCE_ONLY_VIEWS:
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {_VIEW_SQL[name]}")
+    _SOURCES_REGISTERED[spark] = sf_dir
     return list(_SOURCE_ONLY_VIEWS)
 
 
-# Registration memo per (session, sf_dir): view DEFINITIONS are
-# static, so re-running the 28 CREATE OR REPLACE statements (plus
-# re-planning the 3 summary frames) for every view query only costs
-# analysis time — measured ~1-2 s per call across the 17 registered
-# view queries. Registering a DIFFERENT sf_dir on the same session
-# invalidates the memo. Keyed WEAKLY on the SparkSession itself, not
-# applicationId: temp views are session-scoped, and a sibling
-# ``spark.newSession()`` shares the applicationId — an app-id memo
-# would skip registration and leave the sibling's catalog empty.
+# Registration memos per (session, sf_dir): view DEFINITIONS are
+# static, so re-reading the ten source tables and re-running the
+# CREATE OR REPLACE statements (plus re-planning the 3 summary frames)
+# for every view query only costs analysis time — measured ~1-2 s per
+# full registration and 0.37-0.50 s per source-only one. Registering a
+# DIFFERENT sf_dir on the same session invalidates both memos. Keyed
+# WEAKLY on the SparkSession itself, not applicationId: temp views are
+# session-scoped, and a sibling ``spark.newSession()`` shares the
+# applicationId — an app-id memo would skip registration and leave the
+# sibling's catalog empty.
 _REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_SOURCES_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _forget_registration(spark: SparkSession) -> None:
+    """Drop both memos before the shared source temp tables are
+    re-pointed, so a registration that fails part-way is never a hit."""
+    _REGISTERED.pop(spark, None)
+    _SOURCES_REGISTERED.pop(spark, None)
 
 
 def register_all_views(
@@ -427,7 +441,9 @@ def register_all_views(
         *_VIEW_SQL,
     ]
     if not force and _REGISTERED.get(spark) == sf_dir:
+        _pin_session_semantics(spark)
         return names
+    _forget_registration(spark)
     register_views(spark, sf_dir)
     star = build_star_frames(spark, sf_dir)
     for name, df in star.items():
@@ -437,7 +453,7 @@ def register_all_views(
     build_dim_mois(star).createOrReplaceTempView("v_dim_mois")
     for name, sql in _VIEW_SQL.items():
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {sql}")
-    _REGISTERED[spark] = sf_dir
+    _REGISTERED[spark] = _SOURCES_REGISTERED[spark] = sf_dir
     return names
 
 
