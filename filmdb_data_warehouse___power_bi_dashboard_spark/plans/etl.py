@@ -35,15 +35,17 @@ column avoids many-small-files).
 
 from __future__ import annotations
 
+import functools
 import os
 import weakref
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.ranking import global_row_number
 from ..functions.scalar import date_key, net_revenue, sql_round_half_up
+from ..runtime import overlap
 from ..schemas import MONEY
 from ..sources.catalog import read_table
 from ..sources.sinks import merge_upsert, read_warehouse_table, stage_and_swap_write
@@ -215,28 +217,21 @@ def build_fact_paiement(
     # (boundary sample + bucket counts inside global_row_number).
     # Built serially they serialized ~12 tiny jobs (~4.3 s of the
     # entry's 4.34 s committed time was DataFrame CONSTRUCTION, exec
-    # was 0.08 s); a small thread pool lets Spark backfill them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    tasks: dict[str, object] = {}
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        if dims.get("dim_client") is None:
-            tasks["dim_client"] = pool.submit(build_dim_client, spark, sf_dir)
-        if dims.get("dim_magasin") is None:
-            tasks["dim_magasin"] = pool.submit(build_dim_magasin, spark, sf_dir)
-        if dims.get("dim_film") is None:
-            tasks["dim_film"] = pool.submit(build_dim_film, spark, sf_dir)
-        tasks["keyed"] = pool.submit(
-            global_row_number, lineitem, _FACT_ORDER, alias="source_paiement_id"
-        )
-    def _dim(name: str) -> DataFrame:
-        got = dims.get(name)
-        return got if got is not None else tasks[name].result()
-
-    dim_client = _dim("dim_client")
-    dim_magasin = _dim("dim_magasin")
-    dim_film = _dim("dim_film")
-    keyed = tasks["keyed"].result()
+    # was 0.08 s); overlapped, Spark backfills them.
+    builders = {
+        "dim_client": lambda: build_dim_client(spark, sf_dir),
+        "dim_magasin": lambda: build_dim_magasin(spark, sf_dir),
+        "dim_film": lambda: build_dim_film(spark, sf_dir),
+    }
+    missing = [name for name in builders if dims.get(name) is None]
+    *built, keyed = overlap(
+        *(builders[name] for name in missing),
+        lambda: global_row_number(lineitem, _FACT_ORDER, alias="source_paiement_id"),
+    )
+    dims = {**dims, **dict(zip(missing, built))}
+    dim_client = dims["dim_client"]
+    dim_magasin = dims["dim_magasin"]
+    dim_film = dims["dim_film"]
     base = keyed.join(
         orders.select("o_orderkey", "o_custkey"),
         keyed.l_orderkey == orders.o_orderkey,
@@ -311,27 +306,23 @@ def build_star_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     if cached is not None:
         return cached
     # Round-16 optimization (guide §2.6): the dim builds are mutually
-    # independent (film depends only on categorie); build them from a
-    # small thread pool so their tiny driver jobs (boundary sample +
-    # bucket counts) overlap instead of serializing.
-    from concurrent.futures import ThreadPoolExecutor
+    # independent (film depends only on categorie); overlap them so
+    # their tiny driver jobs (boundary sample + bucket counts) fill
+    # each other's gaps instead of serializing.
+    def _cat_and_film():
+        cat = build_dim_categorie(spark, sf_dir)
+        return cat, build_dim_film(spark, sf_dir, cat)
 
-    def _cat_and_film(sp, sd):
-        cat = build_dim_categorie(sp, sd)
-        return cat, build_dim_film(sp, sd, cat)
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = {
-            "dim_date": pool.submit(build_dim_date, spark, sf_dir),
-            "dim_client": pool.submit(build_dim_client, spark, sf_dir),
-            "dim_magasin": pool.submit(build_dim_magasin, spark, sf_dir),
-            "cat_film": pool.submit(_cat_and_film, spark, sf_dir),
-        }
-    dim_categorie, dim_film = futs["cat_film"].result()
+    dim_date, dim_client, dim_magasin, (dim_categorie, dim_film) = overlap(
+        lambda: build_dim_date(spark, sf_dir),
+        lambda: build_dim_client(spark, sf_dir),
+        lambda: build_dim_magasin(spark, sf_dir),
+        _cat_and_film,
+    )
     dims = {
-        "dim_date": futs["dim_date"].result(),
-        "dim_client": futs["dim_client"].result(),
-        "dim_magasin": futs["dim_magasin"].result(),
+        "dim_date": dim_date,
+        "dim_client": dim_client,
+        "dim_magasin": dim_magasin,
         "dim_categorie": dim_categorie,
         "dim_film": dim_film,
     }
@@ -471,39 +462,63 @@ _MERGE_KEYS = {
 }
 
 
+_SUMMARIES = {
+    "v_agg_mensuel_magasin": build_agg_mensuel_magasin,
+    "v_agg_mensuel_categorie": build_agg_mensuel_categorie,
+    "v_dim_mois": build_dim_mois,
+}
+
+
+def _refresh_table(spark: SparkSession, star: dict[str, DataFrame], dw_root: str, name: str) -> int:
+    """One table's whole share of the refresh; returns the rows written.
+
+    A star table is merged into the table already at ``dw_root`` (read
+    here, so the read and the merge plan overlap with the other
+    tables'); a summary is rebuilt from the star. The row count is
+    observed on the write itself instead of read back after it.
+    """
+    path = os.path.join(dw_root, name)
+    partition_by = None
+    if name in _SUMMARIES:
+        df = _SUMMARIES[name](star)
+    else:
+        existing = read_warehouse_table(spark, dw_root, name) if os.path.exists(path) else None
+        df = merge_upsert(existing, star[name], _MERGE_KEYS[name], do_update=name != "dim_date")
+        if name == "fact_paiement":
+            # Cluster files by month so each partition dir gets one
+            # tight file set; pruning on pay_month is then free.
+            df = df.repartition("pay_month")
+            partition_by = ["pay_month"]
+    obs = Observation()
+    stage_and_swap_write(
+        df.observe(obs, F.count(F.lit(1)).alias("rows")), path, partition_by=partition_by
+    )
+    return obs.get["rows"]
+
+
 def build_warehouse(spark: SparkSession, sf_dir: str, dw_root: str) -> dict[str, int]:
     """Full refresh: build the star + summary tables and merge them
     into ``dw_root``. Running twice yields identical tables (the
     reference's ON CONFLICT idempotency, SURVEY §5.3).
 
-    Returns row counts per written table.
+    The six star tables and three summaries are nine independent
+    units of work, run side by side (``runtime.overlap``). Each unit
+    reads its existing table, plans the merge, writes and swaps, so
+    one table's driver jobs fill the gaps of the others'. Each table
+    is still swapped atomically (``stage_and_swap_write``); the
+    refresh as a whole is not atomic, as before: if a unit fails, the
+    tables whose units finished keep their new rows, the failed table
+    keeps its previous rows, and the first error is raised once every
+    unit has ended.
+
+    Returns row counts per written table, observed on each write
+    (``Observation``) rather than read back from the written files.
     """
     os.makedirs(dw_root, exist_ok=True)
     star = build_star_frames(spark, sf_dir)
-    counts: dict[str, int] = {}
-    for name, df in star.items():
-        path = os.path.join(dw_root, name)
-        existing = None
-        if os.path.exists(path):
-            existing = read_warehouse_table(spark, dw_root, name)
-        merged = merge_upsert(existing, df, _MERGE_KEYS[name], do_update=name != "dim_date")
-        if name == "fact_paiement":
-            # Cluster files by month so each partition dir gets one
-            # tight file set; pruning on pay_month is then free.
-            merged = merged.repartition("pay_month")
-            stage_and_swap_write(merged, path, partition_by=["pay_month"])
-        else:
-            stage_and_swap_write(merged, path)
-        counts[name] = read_warehouse_table(spark, dw_root, name).count()
-    summaries = {
-        "v_agg_mensuel_magasin": build_agg_mensuel_magasin(star),
-        "v_agg_mensuel_categorie": build_agg_mensuel_categorie(star),
-        "v_dim_mois": build_dim_mois(star),
-    }
-    for name, df in summaries.items():
-        stage_and_swap_write(df, os.path.join(dw_root, name))
-        counts[name] = read_warehouse_table(spark, dw_root, name).count()
-    return counts
+    names = [*star, *_SUMMARIES]
+    counts = overlap(*(functools.partial(_refresh_table, spark, star, dw_root, n) for n in names))
+    return dict(zip(names, counts))
 
 
 # ---------------------------------------------------------------------------

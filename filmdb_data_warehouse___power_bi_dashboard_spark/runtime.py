@@ -20,13 +20,77 @@ deterministic by construction: hash-sampled boundaries, no cache
 dependence.) The memoized star cache (plans.etl.build_star_frames) is
 deliberately NOT tracked — its persist is a cross-query feature, not a
 leak.
+
+:func:`overlap` is the one way to run independent driver-side work
+side by side: each thunk gets its own thread carrying the caller's
+Spark local properties, and no thread outlives the call.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _LIVE: list[DataFrame] = []
+
+
+def overlap(*thunks):
+    """Run each zero-argument callable on its own thread; return their
+    results in argument order.
+
+    Independent plan builds and writes each pay a chain of small driver
+    jobs; started from separate threads, their jobs fill each other's
+    driver gaps. One thread per thunk, so there is no pool to size.
+    Each thread starts with its own copy of the caller's local
+    properties (job group, description, job tags) and the active
+    session's tags, so its jobs are attributed like the caller's. Every thread is joined before
+    this returns or raises; if any thunk raised, the first error in
+    argument order is re-raised once all threads have ended.
+    """
+    from pyspark.errors import PySparkRuntimeError
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    try:
+        # active() falls back to the default session, which is what a
+        # nested call on an overlap thread (no active session) finds.
+        session = SparkSession.active()
+    except PySparkRuntimeError:
+        session = None
+
+    def wrap(target):
+        # One wrapping per thread: each wrapping clones the caller's
+        # properties, so a property a thunk sets stays on its own thread.
+        if session is None:
+            return inheritable_thread_target(target)
+        outer = inheritable_thread_target(session)
+        return target if outer is session else outer(target)  # pinned-thread mode off
+
+    results: list = [None] * len(thunks)
+    errors: list = [None] * len(thunks)
+
+    def run(i, thunk):
+        try:
+            results[i] = thunk()
+        except BaseException as exc:  # re-raised on the caller thread
+            errors[i] = exc
+
+    threads = [
+        threading.Thread(target=wrap(run), args=(i, thunk), name=f"overlap-{i}")
+        for i, thunk in enumerate(thunks)
+    ]
+    try:
+        for t in threads:
+            t.start()
+    finally:
+        for t in threads:
+            if t.ident is not None:
+                t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results
 
 
 def track_persist(df: DataFrame) -> DataFrame:

@@ -13,8 +13,11 @@ Replicates the reference ETL's write semantics on Spark:
   write-to-staging + atomic directory rename (SURVEY.md §4 X11).
 
 Scale notes: the merge join runs on the business key — at 100 TB the
-existing side is large but the incoming batch is typically small, so
-we broadcast the incoming side when it fits; otherwise both sides
+existing side is large but the incoming batch is typically small.
+``merge_upsert`` gives the join no hint: the planner picks a broadcast
+from size statistics, and AQE converts the join at runtime once a
+shuffled side's measured statistics fall under
+``spark.sql.autoBroadcastJoinThreshold``; otherwise both sides
 hash-shuffle on the key once and AQE handles skew.
 """
 

@@ -8,14 +8,30 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
+import time
 
 import pytest
 
+from filmdb_data_warehouse___power_bi_dashboard_spark.plans import etl
 from filmdb_data_warehouse___power_bi_dashboard_spark.plans.etl import build_warehouse
+from filmdb_data_warehouse___power_bi_dashboard_spark.runtime import overlap
 from filmdb_data_warehouse___power_bi_dashboard_spark.sources.sinks import (
     merge_upsert,
     read_warehouse_table,
 )
+
+WAREHOUSE_TABLES = [
+    "dim_date",
+    "dim_client",
+    "dim_magasin",
+    "dim_categorie",
+    "dim_film",
+    "fact_paiement",
+    "v_agg_mensuel_magasin",
+    "v_agg_mensuel_categorie",
+    "v_dim_mois",
+]
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +79,88 @@ def test_fact_partitioned_by_month(spark, sf_small, dw_root):
     one_month = sorted(p.split("=")[1] for p in parts)[0]
     plan = df.filter(df.pay_month == one_month)._jdf.queryExecution().executedPlan().toString()
     assert "pay_month" in plan
+
+
+def test_build_warehouse_counts_equal_read_back(spark, sf_small, tmp_path):
+    """The counts observed on the writes are the rows the tables hold,
+    on a first build and on a re-run that merges into it."""
+    dw = str(tmp_path / "dw")
+    for _ in range(2):
+        counts = build_warehouse(spark, sf_small, dw)
+        assert list(counts) == WAREHOUSE_TABLES
+        read_back = {name: read_warehouse_table(spark, dw, name).count() for name in counts}
+        assert counts == read_back
+
+
+class _InjectedWriteFailure(RuntimeError):
+    pass
+
+
+def test_build_warehouse_failed_table_keeps_previous_rows(spark, sf_small, tmp_path, monkeypatch):
+    """One table's failed write fails the refresh, after the other
+    eight tables are written; the failed table keeps its previous
+    rows, and no refresh thread outlives the call."""
+    dw = str(tmp_path / "dw")
+    first = build_warehouse(spark, sf_small, dw)
+    film_dir = os.path.join(dw, "dim_film")
+    film_inode = os.stat(film_dir).st_ino
+    original = etl.stage_and_swap_write
+    written = []
+
+    def failing_write(df, path, *args, **kwargs):
+        if os.path.basename(path) == "dim_film":
+            raise _InjectedWriteFailure(path)
+        original(df, path, *args, **kwargs)
+        written.append(os.path.basename(path))
+
+    monkeypatch.setattr(etl, "stage_and_swap_write", failing_write)
+    threads_before = set(threading.enumerate())
+    with pytest.raises(_InjectedWriteFailure):
+        build_warehouse(spark, sf_small, dw)
+    assert [t for t in threading.enumerate() if t not in threads_before] == []
+    assert sorted(written) == sorted(n for n in WAREHOUSE_TABLES if n != "dim_film")
+    assert os.stat(film_dir).st_ino == film_inode
+    assert read_warehouse_table(spark, dw, "dim_film").count() == first["dim_film"]
+
+
+def test_overlap_threads_order_properties_and_errors(spark):
+    sc = spark.sparkContext
+    sc.setLocalProperty("filmdb.test.overlap", "from-caller")
+    try:
+        def probe():
+            return threading.get_ident(), sc.getLocalProperty("filmdb.test.overlap")
+
+        out = overlap(probe, lambda: "second", lambda: 3)
+        ident, prop = out[0]
+        assert ident != threading.get_ident()
+        assert prop == "from-caller"
+        assert out[1:] == ["second", 3]
+
+        # A property one thunk sets stays on its own thread.
+        barrier = threading.Barrier(2)
+
+        def own(value):
+            sc.setLocalProperty("filmdb.test.overlap", value)
+            barrier.wait(timeout=30)
+            return sc.getLocalProperty("filmdb.test.overlap")
+
+        assert overlap(lambda: own("a"), lambda: own("b")) == ["a", "b"]
+        assert sc.getLocalProperty("filmdb.test.overlap") == "from-caller"
+
+        finished = []
+
+        def slow():
+            time.sleep(0.3)
+            finished.append(threading.get_ident())
+
+        def boom():
+            raise ValueError("boom")
+
+        with pytest.raises(ValueError, match="boom"):
+            overlap(slow, boom, slow)
+        assert len(finished) == 2
+    finally:
+        sc.setLocalProperty("filmdb.test.overlap", None)
 
 
 def test_merge_upsert_do_update(spark):
